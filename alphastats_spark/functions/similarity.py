@@ -99,7 +99,7 @@ def _dot(a: Column, b: Column) -> Column:
 # NOTE on the per-pair dot (round-14 measured): a flat unrolled
 # ``try_element_at(a,1)*try_element_at(b,1) + ...`` sum IS bit-identical
 # to the zip_with/aggregate fold and measured 2.1× FASTER over a
-# persisted columnar scan (scripts/bench_dot_flat.py) — but 2.7× SLOWER
+# persisted columnar scan (recorded in VERDICT.md) — but 2.7× SLOWER
 # when the same expression sits in the projection of a bucket self-JOIN
 # (49.1 s vs 18.0 s over the knn_join's 2M-pair volume): the join stage's
 # whole-stage-codegen method grows past what the JIT compiles, and a
@@ -558,6 +558,10 @@ def _sqdist(vec: Column, cent: list[float]) -> Column:
     )
 
 
+# Measured (local[32], 500k × 64-d rows): binding the ``_as_double(vec)``
+# capture once via ``element_at(transform(array(e), v -> body), 1)`` is
+# SLOWER here and in pq_encode_expr — +72% centroid argmin, +45% PQ
+# encode, 0 mismatches — so do not apply let-binding to either.
 def _centroid_id_expr(vec: Column, centroids: list[list[float]]) -> Column:
     """argmin over squared distances to literal centroids (JVM-side).
 

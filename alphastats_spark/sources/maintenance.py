@@ -96,11 +96,19 @@ def promote_staged_parquet(spark: SparkSession, staging: str, dest: str) -> None
     are O(1) metadata moves on HDFS/local (object stores without atomic
     rename degrade to copies, as they do for every committer).
 
+    Partition directories are always created with ``mkdirs`` (a no-op
+    when present) and filled file by file, never renamed wholesale: two
+    appenders introducing the same NEW partition would both see it
+    absent, and the loser's directory rename would land INSIDE the
+    winner's (``p=5/p=5/...``) instead of failing.
+
     Committer bookkeeping (``_SUCCESS``, dot-files) is not promoted; the
     staging directory is deleted after promotion. Crash mid-promotion can
     leave a PARTIAL append visible (some files moved, some not) — the
-    same non-atomic window ``mode("append")``'s job commit has; re-run
-    the append after removing the staged leftovers."""
+    same non-atomic window ``mode("append")``'s job commit has. Nothing
+    records which files already moved, so re-running the append would
+    duplicate their rows: a crash mid-promotion needs manual
+    reconciliation of ``dest`` against the staged leftovers."""
     jvm = spark._jvm
     Path = jvm.org.apache.hadoop.fs.Path
     fs, jsrc = _hadoop_fs(spark, staging)
@@ -112,14 +120,7 @@ def promote_staged_parquet(spark: SparkSession, staging: str, dest: str) -> None
             continue
         target = Path(f"{dest}/{name}")
         if st.isDirectory():
-            if not fs.exists(target):
-                # fresh partition directory: move it wholesale
-                if not fs.rename(st.getPath(), target):
-                    raise IOError(
-                        f"promote_staged_parquet: rename {st.getPath()} -> "
-                        f"{target} failed"
-                    )
-                continue
+            fs.mkdirs(target)
             for f in fs.listStatus(st.getPath()):
                 fn = f.getPath().getName()
                 if fn.startswith("_") or fn.startswith("."):

@@ -101,12 +101,11 @@ def main() -> None:
         cu = last_json_lines(run([py, f"{REPO}/scripts/scale_ext.py", "--curation"]))
         result["curation"] = next(o for o in reversed(cu) if "curation" in o)["curation"]
 
-    # r12/r13: fold pre-computed A/B artifacts (band-ab/cap-sweep ran
-    # hours before the r12 flip; signature-ab is the r13 md5-vs-affine31
-    # family A/B) — passed in as files so long probes can run separately
+    # r12: fold pre-computed A/B artifacts (band-ab/cap-sweep ran hours
+    # before the r12 flip) — passed in as files so long probes can run
+    # separately
     for flag, key in (("--band-ab-file", "banding_ab"),
                       ("--cap-sweep-file", "cap_sweep"),
-                      ("--signature-ab-file", "signature_ab"),
                       ("--curation-file", "curation"),
                       ("--tfidf-pairs-file", "tfidf_pairs")):
         if flag in sys.argv:

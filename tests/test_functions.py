@@ -2208,9 +2208,8 @@ def test_minhash_affine_family(spark):
     """The r13 affine family: coefficients are deterministic with the
     k-prefix property (k=12's coeffs are k=24's first 12, so banding
     subsets stay consistent), signature values are BIGINTs below the
-    prime, the structural one-md5 helper matches the inline expression
-    path, and the legacy md5 family still produces the pre-r13 hex
-    strings."""
+    prime, and the structural one-md5 helper matches the inline
+    expression path."""
     from alphastats_spark.functions import dedup
 
     c24, c12 = dedup._affine_coeffs(24), dedup._affine_coeffs(12)
@@ -2235,16 +2234,6 @@ def test_minhash_affine_family(spark):
         for r in sh.groupBy("doc_id").agg(*dedup.minhash_signature_cols(6)).collect()
     }
     assert inline == rows
-
-    # legacy family: md5 hex strings, unchanged by the flip
-    legacy = dedup._sigs_over_shingles(sh, "doc_id", 4, family="md5")
-    assert all(f.dataType.typeName() == "string" for f in legacy.schema.fields[1:])
-    lrow = legacy.where("doc_id = 1").collect()[0]
-    assert all(len(v) == 32 and int(v, 16) >= 0 for v in tuple(lrow)[1:])
-
-    import pytest as _pytest
-    with _pytest.raises(ValueError, match="unknown MinHash signature family"):
-        dedup.minhash_signature_cols(4, family="sha9000")
 
 
 def test_streaming_dedup_defaults_follow_module(spark, monkeypatch):

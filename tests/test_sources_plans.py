@@ -930,8 +930,8 @@ def test_concurrent_index_appends_match_sequential(spark, tmp_path):
 def test_append_meta_rewrite_skipped_when_identical(spark, tmp_path):
     """A parameter-matching append (the only legal kind) must not touch
     the meta record — the delete+rename swap is what concurrent appenders
-    would race on. An append into an index whose meta predates a field
-    still rewrites (the upgrade path)."""
+    would race on. An append into an index whose meta lacks a field
+    raises instead of stamping fresh meta over rows it cannot vouch for."""
     import json
     import os
 
@@ -948,7 +948,7 @@ def test_append_meta_rewrite_skipped_when_identical(spark, tmp_path):
         after_stat.st_mtime_ns, after_stat.st_ino
     )
 
-    # strip a field to simulate pre-r14 meta: the next append upgrades it
+    # strip a field: the next append refuses the index
     rec = json.loads(open(meta_file).read())
     rec.pop("sig_coeffs")
     with open(meta_file, "w") as f:
@@ -958,9 +958,9 @@ def test_append_meta_rewrite_skipped_when_identical(spark, tmp_path):
     crc = os.path.join(path, "meta", ".part-00000.json.crc")
     if os.path.exists(crc):
         os.remove(crc)
-    dedup.write_dedup_index(docs.where("doc_id % 2 = 1"), path, mode="append")
-    upgraded = json.loads(open(meta_file).read())
-    assert upgraded.get("sig_coeffs") is not None
+    with pytest.raises(ValueError, match="sig_coeffs=None"):
+        dedup.write_dedup_index(docs.where("doc_id % 2 = 1"), path, mode="append")
+    assert "sig_coeffs" not in json.loads(open(meta_file).read())
 
 
 def test_pass_cache_scope_is_thread_owned():
@@ -1092,6 +1092,53 @@ def test_compact_crash_during_swap_keeps_recovery_copy(spark, tmp_path, monkeypa
     import os
 
     assert not os.path.exists(path + "__compact_tmp")
+
+
+def test_promote_same_new_partition_race(spark, tmp_path, monkeypatch):
+    """Two appenders staging the SAME new partition: the second one's
+    existence check ran before the first created the directory (modelled
+    by an ``exists`` that reports every partition directory absent). The
+    loser must still land its files directly in ``part=1`` — not nested
+    as ``part=1/part=1/...`` and not failing the rename."""
+    import os
+
+    from alphastats_spark.sources import maintenance as M
+
+    dest = str(tmp_path / "table")
+    df = spark.createDataFrame(
+        [(i, 1) for i in range(10)], "id bigint, part int"
+    )
+    for tag, rows in (("a", "id < 5"), ("b", "id >= 5")):
+        df.where(rows).write.partitionBy("part").parquet(str(tmp_path / tag))
+
+    M.promote_staged_parquet(spark, str(tmp_path / "a"), dest)
+
+    class _StaleExists:
+        def __init__(self, fs):
+            self._fs = fs
+
+        def exists(self, p):
+            return False if p.getName().startswith("part=") else self._fs.exists(p)
+
+        def __getattr__(self, name):
+            return getattr(self._fs, name)
+
+    real = M._hadoop_fs
+
+    def stale_fs(spark_, path):
+        fs, p = real(spark_, path)
+        return _StaleExists(fs), p
+
+    monkeypatch.setattr(M, "_hadoop_fs", stale_fs)
+    M.promote_staged_parquet(spark, str(tmp_path / "b"), dest)
+    monkeypatch.undo()
+
+    part_dir = os.path.join(dest, "part=1")
+    assert not [
+        e for e in os.listdir(part_dir) if os.path.isdir(os.path.join(part_dir, e))
+    ]
+    got = sorted(r["id"] for r in spark.read.parquet(dest).collect())
+    assert got == list(range(10))
 
 
 # ---------------------------------------------------------------------------
@@ -1239,113 +1286,83 @@ def test_index_meta_single_row_on_append(spark, tmp_path):
         dedup.read_index_meta(spark, path)
 
 
-def _legacy_md5_index(spark, docs, path, k=8, rows_per_band=2, n=3,
-                      write_meta=True):
-    """Simulate an index written by PRE-r13 code: md5-family band
-    signatures, and (when present) a meta row WITHOUT sig_family —
-    byte-for-byte what write_dedup_index produced before the affine
-    family and the (8, 2) → (24, 3) default flip."""
-    from alphastats_spark.functions import dedup
-
-    sh = dedup._exploded_shingles(docs, "doc_id", "text", n, out_id="match_id")
-    dedup._band_table(
-        dedup._sigs_over_shingles(sh, "match_id", k, family="md5"),
-        "match_id", k, rows_per_band,
-    ).write.partitionBy("band").parquet(f"{path}/bands")
-    sh.write.parquet(f"{path}/shingles")
-    if write_meta:
-        spark.createDataFrame(
-            [(k, rows_per_band, n, 1)],
-            "k int, rows_per_band int, n int, version int",
-        ).coalesce(1).write.json(f"{path}/meta")
-
-
-def test_legacy_md5_index_admits_via_stored_meta(spark, tmp_path):
-    """An index written BEFORE the r13 family flip (md5 signatures, (8,2)
-    banding, meta without sig_family) must keep admitting correctly with
-    NO explicit parameters: stored meta wins over the moved module
-    defaults ((8,2) → (24,3), md5 → affine31). If the reader resolved
-    module defaults instead, the batch's band signatures would live in a
-    different hash universe than the stored corpus's — zero collisions,
-    every near-duplicate silently admitted — which is exactly what the
-    exact-duplicate assertions below would catch."""
-    from pyspark.sql import functions as F
+def _index_with_meta(spark, tmp_path, name, meta_row):
+    """A real 8/2/3 index over the tiny corpus whose ``<path>/meta`` is
+    replaced by ``meta_row`` (``None`` removes the meta directory)."""
+    import shutil
 
     from alphastats_spark.functions import dedup
 
-    corpus = _tiny_docs(spark).where("doc_id % 5 != 0")
-    path = str(tmp_path / "legacy_idx")
-    _legacy_md5_index(spark, corpus, path)
-
-    # batch: two EXACT copies of corpus texts (collide in every band
-    # under ANY correct family) + one novel document
-    batch = spark.createDataFrame(
-        [
-            (1001, " ".join(f"tok{(1 * 13 + j * 7) % 23}" for j in range(12))),
-            (1002, " ".join(f"tok{(2 * 13 + j * 7) % 23}" for j in range(12))),
-            (1003, " ".join(f"novel{j}" for j in range(12))),
-        ],
-        "doc_id bigint, text string",
+    path = str(tmp_path / name)
+    dedup.write_dedup_index(
+        _tiny_docs(spark).where("doc_id % 5 != 0"), path,
+        k=8, rows_per_band=2, n=3,
     )
-    out = {
-        r["doc_id"]: r
-        for r in dedup.admit_against_index(batch, path, threshold=0.5).collect()
-    }
-    assert not out[1001]["admitted"] and out[1001]["best_jaccard"] == 1.0
-    assert not out[1002]["admitted"] and out[1002]["best_jaccard"] == 1.0
-    assert out[1003]["admitted"]
-
-    # the streaming reader resolves the same stored meta (family included)
-    from alphastats_spark.streaming import streaming_index_candidates
-
-    src = str(tmp_path / "legacy_stream_src")
-    batch.coalesce(1).write.parquet(src)
-    stream = spark.readStream.schema("doc_id bigint, text string").parquet(src)
-    bands = spark.read.parquet(f"{path}/bands")
-    name = "legacy_idx_stream_q"
-    sq = (
-        streaming_index_candidates(stream, bands, index_path=path)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    sq.awaitTermination(120)
-    got = {
-        r["new_id"]
-        for r in spark.table(name).select("new_id").distinct().collect()
-    }
-    assert {1001, 1002} <= got and 1003 not in got
+    shutil.rmtree(f"{path}/meta")
+    if meta_row is not None:
+        dedup._write_index_meta_fs(spark, path, meta_row)
+    return path
 
 
 def test_metaless_index_requires_explicit_params(spark, tmp_path):
     """A PRE-METADATA index (no <path>/meta at all) must not silently
     resolve to module defaults — defaults move across releases, and a
     mismatched family/banding yields zero collisions (every near-dup
-    admitted). No params → raise; explicit legacy params → correct
-    admission via the md5 family."""
+    admitted). It raises with no, partial or full explicit parameters:
+    nothing records which family its bands were hashed with."""
     from alphastats_spark.functions import dedup
 
-    corpus = _tiny_docs(spark).where("doc_id % 5 != 0")
-    path = str(tmp_path / "metaless_idx")
-    _legacy_md5_index(spark, corpus, path, write_meta=False)
-
+    path = _index_with_meta(spark, tmp_path, "metaless_idx", None)
     batch = spark.createDataFrame(
         [(1001, " ".join(f"tok{(1 * 13 + j * 7) % 23}" for j in range(12)))],
         "doc_id bigint, text string",
     )
     with pytest.raises(ValueError, match="no <path>/meta|explicit"):
         dedup.admit_against_index(batch, path)
-    # a PARTIAL explicit set is the same hazard: the missing parameters
-    # would fill from CURRENT module defaults, which move across releases
-    # (r12 flipped rows_per_band 2 → 3) — k=8 explicit + defaulted
-    # rows_per_band yields a wrong band table with no error
     with pytest.raises(ValueError, match="rows_per_band, n"):
         dedup.admit_against_index(batch, path, k=8)
     with pytest.raises(ValueError, match="no <path>/meta"):
         dedup.admit_against_index(batch, path, k=8, rows_per_band=2)
-    row = dedup.admit_against_index(
-        batch, path, k=8, rows_per_band=2, n=3
-    ).collect()[0]
-    assert not row["admitted"] and row["best_jaccard"] == 1.0
+    with pytest.raises(ValueError, match="no <path>/meta"):
+        dedup.admit_against_index(batch, path, k=8, rows_per_band=2, n=3)
+
+
+@pytest.mark.parametrize(
+    "meta_row",
+    [
+        {"k": 8, "rows_per_band": 2, "n": 3, "version": 1},
+        {"k": 8, "rows_per_band": 2, "n": 3, "version": 2,
+         "sig_family": "md5", "sig_coeffs": None},
+        {"k": 8, "rows_per_band": 2, "n": 3, "version": 2,
+         "sig_family": "affine31"},
+    ],
+    ids=["no_family", "md5", "affine31_no_coeffs"],
+)
+def test_index_meta_requires_affine31_with_coeffs(spark, tmp_path, meta_row):
+    """Index meta is one format: ``sig_family == "affine31"`` plus the
+    ``sig_coeffs`` stamp. A row missing the family, recording another
+    family, or missing the stamp makes every reader — batch admit,
+    append and the streaming index reader — raise and ask for a rebuild
+    instead of banding into buckets the stored rows may not share."""
+    from alphastats_spark.functions import dedup
+    from alphastats_spark.streaming import streaming_index_candidates
+
+    path = _index_with_meta(spark, tmp_path, "meta_idx", meta_row)
+    docs = _tiny_docs(spark).limit(5)
+    with pytest.raises(ValueError, match="Rebuild"):
+        dedup.admit_against_index(docs, path)
+    with pytest.raises(ValueError, match="Rebuild"):
+        dedup.write_dedup_index(
+            docs, path, k=8, rows_per_band=2, n=3, mode="append"
+        )
+    stream = (
+        spark.readStream.format("rate").load()
+        .selectExpr("value as doc_id", "cast(value as string) as text")
+    )
+    with pytest.raises(ValueError, match="Rebuild"):
+        streaming_index_candidates(
+            stream, spark.read.parquet(f"{path}/bands"), index_path=path
+        )
 
 
 def test_index_meta_coeffs_checksum(spark, tmp_path):
@@ -1353,8 +1370,7 @@ def test_index_meta_coeffs_checksum(spark, tmp_path):
     into meta; readers validate it against the runtime's frozen table and
     fail LOUDLY on divergence (a divergent table hashes every batch into
     empty buckets — zero collisions, every near-duplicate admitted). A
-    pre-r14 affine meta row WITHOUT the stamp (null) stays valid: the
-    table is frozen source, so its values are the build-time values."""
+    meta row WITHOUT the stamp raises too: the reader cannot check it."""
     from alphastats_spark.functions import dedup
 
     docs = _tiny_docs(spark)
@@ -1376,92 +1392,21 @@ def test_index_meta_coeffs_checksum(spark, tmp_path):
     with pytest.raises(ValueError, match="coefficient checksum"):
         dedup.admit_against_index(docs.limit(5), path)
 
-    # pre-r14 affine meta: sig_family present, no sig_coeffs field at all
+    # affine meta with no sig_coeffs field at all
     spark.createDataFrame(
         [(8, 2, 3, 2, "affine31")],
         "k int, rows_per_band int, n int, version int, sig_family string",
     ).coalesce(1).write.mode("overwrite").json(f"{path}/meta")
-    assert dedup.admit_against_index(docs.limit(5), path).count() == 5
-
-
-def test_xxh31_index_roundtrip(spark, tmp_path):
-    """The opt-in xxh31 family (xxhash64 base hash feeding the same
-    frozen affine transforms): an index built with it records the family
-    AND the coefficient checksum in meta, batch admit resolves the stored
-    family (exact copies collide in every band; novel docs admit), the
-    streaming reader threads the family through its banding, a
-    conflicting-family append raises, and 'md5' is read-only legacy."""
-    from alphastats_spark.functions import dedup
-    from alphastats_spark.streaming import streaming_index_candidates
-
-    corpus = _tiny_docs(spark).where("doc_id % 5 != 0")
-    path = str(tmp_path / "xxh_idx")
-    dedup.write_dedup_index(
-        corpus, path, k=8, rows_per_band=2, n=3, sig_family="xxh31"
-    )
-    meta = dedup.read_index_meta(spark, path)
-    assert meta.sig_family == "xxh31"
-    assert meta.sig_coeffs == dedup._affine_checksum(8)
-
-    batch = spark.createDataFrame(
-        [
-            (1001, " ".join(f"tok{(1 * 13 + j * 7) % 23}" for j in range(12))),
-            (1003, " ".join(f"novel{j}" for j in range(12))),
-        ],
-        "doc_id bigint, text string",
-    )
-    out = {
-        r["doc_id"]: r
-        for r in dedup.admit_against_index(batch, path, threshold=0.5).collect()
-    }
-    assert not out[1001]["admitted"] and out[1001]["best_jaccard"] == 1.0
-    assert out[1003]["admitted"]
-
-    # the streaming reader resolves the stored xxh31 family from meta
-    src = str(tmp_path / "xxh_stream_src")
-    batch.coalesce(1).write.parquet(src)
-    stream = spark.readStream.schema("doc_id bigint, text string").parquet(src)
-    bands = spark.read.parquet(f"{path}/bands")
-    name = "xxh_idx_stream_q"
-    sq = (
-        streaming_index_candidates(stream, bands, index_path=path)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    sq.awaitTermination(120)
-    got = {
-        r["new_id"]
-        for r in spark.table(name).select("new_id").distinct().collect()
-    }
-    assert 1001 in got and 1003 not in got
-
-    # conflicting explicit family on append raises; md5 builds are legacy
-    with pytest.raises(ValueError, match="does not match the index"):
-        dedup.write_dedup_index(
-            corpus, path, k=8, rows_per_band=2, n=3,
-            mode="append", sig_family="affine31",
-        )
-    with pytest.raises(ValueError, match="read-only legacy"):
-        dedup.write_dedup_index(
-            corpus, str(tmp_path / "md5_idx"), sig_family="md5"
-        )
-    # signature values live in the same [0, p) universe but are a
-    # DIFFERENT hash family — they must not accidentally equal affine31's
-    aff = dedup.minhash_signatures(corpus.limit(3), k=4).collect()
-    xxh = dedup.minhash_signatures(corpus.limit(3), k=4, family="xxh31").collect()
-    assert all(
-        0 <= v < dedup.MINHASH_PRIME for r in xxh for v in tuple(r)[1:]
-    )
-    assert [tuple(r)[1:] for r in aff] != [tuple(r)[1:] for r in xxh]
+    with pytest.raises(ValueError, match="sig_coeffs=None"):
+        dedup.admit_against_index(docs.limit(5), path)
 
 
 def test_streaming_index_bands_without_path_warns(spark, tmp_path):
     """streaming_index_candidates with index_bands but NO index_path bands
-    the stream with CURRENT module defaults — against md5-era stored
-    bands that is zero collisions and silent admission of every
-    near-duplicate (the r13 family flip made this a live migration
-    hazard), so the opt-out form must emit a UserWarning naming
-    index_path as the safe alternative."""
+    the stream with CURRENT module defaults — against bands built with
+    other parameters that is zero collisions and silent admission of
+    every near-duplicate, so the opt-out form must emit a UserWarning
+    naming index_path as the safe alternative."""
     from alphastats_spark.functions import dedup
     from alphastats_spark.streaming import streaming_index_candidates
 
